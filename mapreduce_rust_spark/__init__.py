@@ -15,7 +15,8 @@ Design center (SURVEY.md §7):
   logical plans and let Catalyst/Tungsten pick physical strategy.
 * **A thin ``MapReduceJob`` API** (``operators.mapreduce``) gives
   surface parity with the reference's ``MapFn``/``ReduceFn`` pairs,
-  executed via Arrow-vectorized ``mapInPandas``/``applyInPandas``.
+  executed via Arrow-vectorized ``mapInPandas`` (map) and one
+  ``mapInArrow`` call per batch of key groups (reduce).
 * **Scale-first**: AQE on, broadcast small dims, algebraic (partial)
   aggregation preferred over collect_list, salting documented for hot
   keys. Tested on local[32]; designed for 1000 executors.

@@ -35,6 +35,9 @@ reference for the bucketed variant in ``similarity.py``.
 
 from __future__ import annotations
 
+import threading
+import time
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -273,19 +276,23 @@ _SIG_INDEX: dict[tuple[str, str], DataFrame] = {}
 # keyed by the memo key's tag. The bench reports these so that
 # adjudicated per-query numbers (which are warm for memoized families)
 # don't hide the one-time build cost — every build is charged visibly
-# in the artifact (r10 verdict ask #2).
+# in the artifact (r10 verdict ask #2). Each build is charged its self
+# time only: an index built inside another build's ``build()`` is
+# charged to its own tag, not to both.
 INDEX_BUILD_SECONDS: dict[str, float] = {}
 
 
 # serializes concurrent builds of the same index (the plan-audit test
 # builds plans from a thread pool; without the lock two threads would
 # both run the eager checkpoint)
-_MEMO_LOCK = __import__("threading").RLock()
+_MEMO_LOCK = threading.RLock()
+
+# seconds of nested builds, one entry per build in progress; only the
+# thread holding _MEMO_LOCK builds, so one stack serves every thread
+_NESTED_BUILD_SECONDS: list[float] = []
 
 
 def _memoized(cache: dict, key: tuple, build) -> DataFrame:
-    import time as _time
-
     with _MEMO_LOCK:
         cached = cache.get(key)
         if cached is not None:
@@ -294,12 +301,19 @@ def _memoized(cache: dict, key: tuple, build) -> DataFrame:
                 return cached
             except Exception:  # noqa: BLE001 — stale session: rebuild
                 cache.pop(key, None)
-        t0 = _time.time()
-        df = build().localCheckpoint()
+        _NESTED_BUILD_SECONDS.append(0.0)
+        t0 = time.perf_counter()
+        try:
+            df = build().localCheckpoint()
+        finally:
+            elapsed = time.perf_counter() - t0
+            nested = _NESTED_BUILD_SECONDS.pop()
+            if _NESTED_BUILD_SECONDS:
+                _NESTED_BUILD_SECONDS[-1] += elapsed
         cache[key] = df
         tag = str(key[-1]) if isinstance(key, tuple) and key else str(key)
         INDEX_BUILD_SECONDS[tag] = round(
-            INDEX_BUILD_SECONDS.get(tag, 0.0) + (_time.time() - t0), 3
+            INDEX_BUILD_SECONDS.get(tag, 0.0) + (elapsed - nested), 3
         )
         return df
 

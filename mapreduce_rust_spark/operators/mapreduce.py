@@ -24,11 +24,13 @@ Execution strategy, in preference order:
    README.md:70 TODO 1) with spill-to-disk. This is the only shape
    that survives a hot key at 100 TB.
 2. ``MapReduceJob``/``reduce_groups`` — arbitrary user Python
-   ``ReduceFn``: hash-shuffle by key, ``applyInPandas`` one pandas
-   batch per key group. Arrow-vectorized, but a single giant group
-   must fit one executor's memory — same failure mode as the
-   reference's per-reducer HashMap (``worker.rs:126-131``), so prefer
-   (1) whenever the algebra allows.
+   ``ReduceFn``: Spark collects each key's values into one list (with
+   map-side partial collection before the shuffle), then one
+   ``mapInArrow`` call per Arrow batch of key groups runs the user
+   function once per key. A single giant group must still fit one
+   executor's memory — same failure mode as the reference's
+   per-reducer HashMap (``worker.rs:126-131``), so prefer (1)
+   whenever the algebra allows.
 """
 
 from __future__ import annotations
@@ -105,23 +107,42 @@ def reduce_groups(
     """Arbitrary user ReduceFn per key → one (key, value) row per key.
 
     ``reduce_udf`` parity (``worker.rs:124-144``): the user function
-    receives (key, list-of-values) exactly as in the reference. Values
-    arrive sorted (deterministic; the reference's hash order is not).
-    Executed with ``applyInPandas`` after a hash shuffle on key —
-    canonical MapReduce partitioning, not the reference's per-map-task
-    modulo routing (``coordinator.rs:147``).
+    receives (key, list-of-values) exactly as in the reference, once
+    per key. Values arrive in Python ``sorted()`` (code-point) order,
+    nulls first, so ``len(values)`` is always the key's row count
+    (deterministic; the reference's hash order is not).
+
+    Spark groups first: ``collect_list`` per key, partially on the
+    map side and finished after a hash shuffle on key (canonical
+    MapReduce partitioning, not the reference's per-map-task modulo
+    routing, ``coordinator.rs:147``). ``collect_list`` drops nulls, so a
+    ``count_if`` column carries them. Then one ``mapInArrow`` call
+    per Arrow batch of groups runs ``reduce_fn`` over every group row
+    in it. A non-string return fails the Arrow conversion, so the job
+    fails as a raising ``reduce_fn`` does.
     """
+    import pyarrow as pa
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[key_col].iloc[0]
-        values = sorted(pdf[value_col].tolist())
-        k, v = reduce_fn(key, values)
-        return pd.DataFrame({"key": [k], "value": [v]})
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            keys, values, nulls = (c.to_pylist() for c in batch.columns)
+            out_k: list[str] = []
+            out_v: list[str] = []
+            for key, vals, n_null in zip(keys, values, nulls):
+                k, v = reduce_fn(key, [None] * n_null + sorted(vals))
+                out_k.append(k)
+                out_v.append(v)
+            yield pa.record_batch(
+                [pa.array(out_k, pa.string()), pa.array(out_v, pa.string())],
+                names=["key", "value"],
+            )
 
+    # F.isnull, not Column.isNull: a Column method's call-site capture
+    # imports IPython (when installed) into the driver, about 20 MB
     return (
-        df.select(key_col, value_col)
-        .groupBy(key_col)
-        .applyInPandas(run, schema=KV_SCHEMA)
+        df.groupBy(key_col)
+        .agg(F.collect_list(value_col), F.count_if(F.isnull(value_col)))
+        .mapInArrow(run, schema=KV_SCHEMA)
     )
 
 

@@ -236,8 +236,10 @@ FROM events GROUP BY 1
 def reduce_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MapReduceJob through the UDF path: the reference's own
     wordcount MapFn/ReduceFn (``mr_app/src/client.rs:3-21``) executed
-    via mapInPandas + applyInPandas. Counts are strings at the API
-    edge exactly as in the reference (client.rs:20)."""
+    via mapInPandas for the map, then ``collect_list`` per key and one
+    mapInArrow call per Arrow batch of key groups for the reduce.
+    Counts are strings at the API edge exactly as in the reference
+    (client.rs:20)."""
     docs = load_table(spark, sf_dir, "documents")
     kv = docs.select(
         F.col("doc_id").cast("string").alias("key"), F.col("text").alias("value")
@@ -256,9 +258,10 @@ def reduce_arrow_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ReduceFn boundary on Spark 4's Arrow-NATIVE grouped map
     (``applyInArrow``): each group's reducer receives a
     ``pyarrow.Table`` and returns one — zero pandas materialization,
-    so the Python boundary cost is pure Arrow IPC (the fastest
-    possible custom-reduce path; the applyInPandas variant in
-    ``reduce_udf`` pays an extra columnar→pandas conversion each way).
+    so the Python boundary cost is pure Arrow IPC. ``reduce_udf``
+    also crosses the boundary in Arrow batches (of collected key
+    groups, via ``mapInArrow``) but hands its ReduceFn a Python list
+    of values per key instead of a table.
     Reduces events per type to (n, sum) like the reference's ReduceFn
     folds its value list (``mr_app/src/client.rs:13-21``)."""
     import math

@@ -10,6 +10,7 @@ reference-parity surface, plus the engine-extension families
 from __future__ import annotations
 
 from collections.abc import Callable
+import importlib
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,6 +34,17 @@ def _register(queries: dict[str, QueryFn], oracles: dict[str, str]) -> None:
 def _load() -> None:
     if _QUERIES:
         return
+    try:
+        _load_all()
+    except BaseException:
+        # a failed import must not leave a partial registry behind for
+        # the next call to return as if it were whole
+        _QUERIES.clear()
+        _ORACLES.clear()
+        raise
+
+
+def _load_all() -> None:
     from mapreduce_rust_spark.plans import (
         advanced,
         analytics,
@@ -70,10 +82,7 @@ def _load() -> None:
         "mapreduce_rust_spark.sources.formats",
         "mapreduce_rust_spark.sources.pysource",
     ):
-        try:
-            mod = __import__(mod_name, fromlist=["QUERIES", "ORACLE"])
-        except ImportError:
-            continue
+        mod = importlib.import_module(mod_name)
         _register(mod.QUERIES, getattr(mod, "ORACLE", {}))
 
 

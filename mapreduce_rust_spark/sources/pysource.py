@@ -445,11 +445,6 @@ def _register_partitioned_stream_source(spark: SparkSession) -> None:
             for i in range(partition.a, partition.b):
                 yield (i, i % 16, (i * i) % 9973)
 
-        def commit(self, end: dict) -> None:
-            # Fast-forward the pacing cursor past anything already
-            # committed, so latestOffset is monotonic across restarts.
-            self._pos = max(getattr(self, "_pos", 0), end["pos"])
-
     class PartitionedRangeStream(DataSource):
         @classmethod
         def name(cls) -> str:

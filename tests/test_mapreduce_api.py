@@ -4,6 +4,7 @@ tiny in-memory frames mirroring the reference's unit tests
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -45,6 +46,64 @@ def test_reduce_groups_one_row_per_key(spark):
     out = reduce_groups(df, lambda k, vs: (k, str(sum(map(int, vs)))))
     got = {r["key"]: r["value"] for r in out.collect()}
     assert got == {"a": "3", "b": "5"}
+
+
+def test_reduce_groups_crosses_arrow_batches(spark):
+    """More keys than one Arrow batch holds (10k rows) in one reduce
+    partition: every key is reduced once, counts match a Counter."""
+    from collections import Counter
+
+    from mapreduce_rust_spark.operators.mapreduce import reduce_groups, wordcount_fns
+
+    words = [f"w{i % 12_000}" for i in range(30_000)]
+    df = kv(spark, [(w, "1") for w in words]).repartition(1, "key")
+    out = reduce_groups(df, wordcount_fns()[1])
+    assert out.rdd.getNumPartitions() == 1
+    got = {r["key"]: int(r["value"]) for r in out.collect()}
+    assert got == Counter(words)
+
+
+def test_reduce_groups_values_in_python_sorted_order(spark):
+    """Non-ASCII values arrive in Python ``sorted()`` (code-point) order."""
+    from mapreduce_rust_spark.operators.mapreduce import reduce_groups
+
+    vals = ["日", "z", "é", "Z"]
+    out = reduce_groups(kv(spark, [("k", v) for v in vals]), lambda k, vs: (k, "|".join(vs)))
+    assert [tuple(r) for r in out.collect()] == [("k", "|".join(sorted(vals)))]
+
+
+def test_reduce_groups_passes_nulls_first(spark):
+    """Nulls reach the ReduceFn, first, so len(values) is the row count."""
+    from mapreduce_rust_spark.operators.mapreduce import reduce_groups
+
+    df = kv(spark, [("a", "x"), ("a", None), ("a", None), ("b", None)])
+    out = reduce_groups(df, lambda k, vs: (k, repr(vs)))
+    got = {r["key"]: r["value"] for r in out.collect()}
+    assert got == {"a": repr([None, None, "x"]), "b": repr([None])}
+
+
+def test_reduce_groups_may_rename_key(spark):
+    """The returned (k, v) is written as-is, including a different key."""
+    from mapreduce_rust_spark.operators.mapreduce import reduce_groups
+
+    df = kv(spark, [("a", "1"), ("a", "2"), ("b", "5")])
+    out = reduce_groups(df, lambda k, vs: (k.upper() + "!", str(len(vs))))
+    assert sorted(tuple(r) for r in out.collect()) == [("A!", "2"), ("B!", "1")]
+
+
+@pytest.mark.parametrize(
+    "reduce_fn",
+    [lambda k, vs: (k, 1 / 0), lambda k, vs: (k, len(vs))],
+    ids=["raises", "returns_int"],
+)
+def test_reduce_groups_bad_reduce_fn_fails_job(spark, reduce_fn):
+    from pyspark.errors import PythonException
+
+    from mapreduce_rust_spark.operators.mapreduce import reduce_groups
+
+    df = kv(spark, [("a", "1"), ("b", "2")])
+    with pytest.raises(PythonException):
+        reduce_groups(df, reduce_fn).collect()
 
 
 def test_reduce_by_key_algebraic(spark):

@@ -27,6 +27,26 @@ def duck(sf_dir):
     return duck_con(sf_dir)
 
 
+def test_registry_slug_count_pinned():
+    """A module that drops out of the registry shrinks it; pin the count."""
+    from mapreduce_rust_spark.registry import queries
+
+    assert len(queries()) == 424
+
+
+def test_registry_import_failure_is_loud(monkeypatch):
+    """A query module that fails to import fails the registry load and
+    leaves no partial registry behind."""
+    from mapreduce_rust_spark import registry
+
+    monkeypatch.setattr(registry, "_QUERIES", {})
+    monkeypatch.setattr(registry, "_ORACLES", {})
+    monkeypatch.setitem(sys.modules, "mapreduce_rust_spark.operators.graph", None)
+    with pytest.raises(ImportError):
+        registry.queries()
+    assert registry._QUERIES == {} and registry._ORACLES == {}
+
+
 def test_priority_slugs_in_driver_window():
     """The driver value-checks only the first 50 queries() entries;
     every slug needing fresh oracle evidence this round must be there."""

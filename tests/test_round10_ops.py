@@ -100,6 +100,39 @@ def test_session_memoized_indexes_are_shared(spark, sf_dir):
         assert fn(spark, sf_dir) is fn(spark, sf_dir), fn.__name__
 
 
+def test_memoized_charges_nested_builds_self_time(monkeypatch):
+    """An index built inside another index's build is charged to its
+    own tag only: the outer build's seconds exclude the nested one."""
+    import types
+
+    from mapreduce_rust_spark.operators import dedup
+
+    now = [0.0]
+    monkeypatch.setattr(dedup, "time", types.SimpleNamespace(perf_counter=lambda: now[0]))
+    monkeypatch.setattr(dedup, "INDEX_BUILD_SECONDS", {})
+
+    class Frame:
+        schema = None
+
+        def localCheckpoint(self):
+            return self
+
+    def work(seconds):
+        now[0] += seconds
+        return Frame()
+
+    cache: dict = {}
+
+    def outer():
+        work(1.0)
+        dedup._memoized(cache, ("d", "inner"), lambda: work(2.0))
+        return work(0.5)
+
+    dedup._memoized(cache, ("d", "outer"), outer)
+    assert dedup.INDEX_BUILD_SECONDS == {"outer": 1.5, "inner": 2.0}
+    assert dedup._NESTED_BUILD_SECONDS == []
+
+
 def test_kmeans_memoized_matches_inline_trace(spark, sf_dir):
     """Memoizing the Lloyd trace must not change any value: the cached
     centroid frame equals a fresh inline recomputation."""
