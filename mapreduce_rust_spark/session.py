@@ -23,6 +23,8 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -40,6 +42,31 @@ def scratch_dir(prefix: str = "mrs_") -> str:
         _SCRATCH_ROOT = tempfile.mkdtemp(prefix="mrs_scratch_")
         atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
+def state_partitions(spark: SparkSession, cap: int = 16) -> int:
+    """Shuffle and state-store partition count for a bounded local
+    stream: the session's cores, at most ``cap`` — never more state
+    stores to commit per micro-batch than cores to commit them."""
+    return min(spark.sparkContext.defaultParallelism, cap)
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str | int]) -> Iterator[None]:
+    """Set session confs for the ``with`` body, then restore each
+    previous value — unsetting a key that was unset before, so a bare
+    session falls back to Spark's own default, not a copied one."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

@@ -25,13 +25,39 @@ reference hardcoded as ``n_map``.
 
 from __future__ import annotations
 
+import time
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from mapreduce_rust_spark.session import scoped_confs, scratch_dir, state_partitions
 
 ORACLE: dict[str, str] = {}
 
 N_ROWS = 4096
 N_PARTS = 8
+DRAIN_TIMEOUT_S = 120.0
+
+
+def drain(query: StreamingQuery, done: Callable[[], bool]) -> None:
+    """Poll ``done()`` every 50 ms while a continuous-trigger stream
+    runs, then stop the stream. Raises ``TimeoutError`` if the stream
+    dies (chaining its exception) or ``DRAIN_TIMEOUT_S`` passes first,
+    so a caller never reads a partially drained sink."""
+    try:
+        deadline = time.monotonic() + DRAIN_TIMEOUT_S
+        while not done():
+            if not query.isActive or time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"stream {query.name or query.id} not drained within "
+                    f"{DRAIN_TIMEOUT_S} s (active: {query.isActive})"
+                ) from query.exception()
+            time.sleep(0.05)
+    finally:
+        query.stop()
+    query.awaitTermination(30)
 
 
 def _register_source(spark: SparkSession) -> None:
@@ -318,8 +344,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back — so the oracle match proves the writer's contract
     (partition fan-out, commit rename, faithful values), not just
     that save() returned."""
-    from mapreduce_rust_spark.session import scratch_dir
-
     _register_source(spark)
     _register_sink(spark)
     agg = (
@@ -459,53 +483,38 @@ def _register_partitioned_stream_source(spark: SparkSession) -> None:
     spark.dataSource.register(PartitionedRangeStream)
 
 
+def _drain_bucket_agg(spark: SparkSession, fmt: str, name: str) -> DataFrame:
+    """The per-bucket aggregation over the ``fmt`` stream into a
+    complete-mode memory sink ``name``, drained until it has counted
+    all N_ROWS rows."""
+    sdf = spark.readStream.format(fmt).load()
+    agg = sdf.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("id").alias("sum_id"),
+        F.sum("val").alias("sum_val"),
+    )
+    count_sql = f"SELECT coalesce(sum(n), 0) AS c FROM {name}"
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": state_partitions(spark)}):
+        query = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .trigger(processingTime="0 seconds")
+            .option("checkpointLocation", scratch_dir(prefix=f"{name}_ckpt_"))
+            .start()
+        )
+        drain(query, lambda: spark.sql(count_sql).collect()[0]["c"] >= N_ROWS)
+    return spark.table(name).orderBy("bucket")
+
+
 def source_python_stream_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same relation and drain protocol as ``source_python_stream``,
     ingested through the PARTITIONED stream reader: one micro-batch ×
     8 executor-parallel splits. Hash-equality against the batch
     oracle proves no split was dropped, duplicated, or mis-ranged —
     the partition-planning contract, on top of exactly-once."""
-    import time
-
-    from mapreduce_rust_spark.session import scratch_dir
-
     _register_partitioned_stream_source(spark)
-    sdf = spark.readStream.format("mrs_range_pstream").load()
-    agg = sdf.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("id").alias("sum_id"),
-        F.sum("val").alias("sum_val"),
-    )
-    name = "mrs_pstream_sink"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .option("checkpointLocation", scratch_dir(prefix="mrs_pstream_ckpt_"))
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                got = spark.sql(
-                    f"SELECT coalesce(sum(n), 0) AS c FROM {name}"
-                ).collect()[0]["c"]
-                if got >= N_ROWS:
-                    break
-                time.sleep(0.05)
-        finally:
-            query.stop()
-            query.awaitTermination(30)
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name).orderBy("bucket")
+    return _drain_bucket_agg(spark, "mrs_range_pstream", "mrs_pstream_sink")
 
 
 ORACLE["source_python_stream_partitioned"] = ORACLE["source_python_datasource"]
@@ -522,47 +531,8 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     query ran. availableNow drains only one read() for simple stream
     readers, so the run uses a continuous trigger with a bounded
     drain: poll the sink until all rows are absorbed, then stop."""
-    import time
-
-    from mapreduce_rust_spark.session import scratch_dir
-
     _register_stream_source(spark)
-    sdf = spark.readStream.format("mrs_range_stream").load()
-    agg = sdf.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("id").alias("sum_id"),
-        F.sum("val").alias("sum_val"),
-    )
-    name = "mrs_pystream_sink"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .option("checkpointLocation", scratch_dir(prefix="mrs_pystream_ckpt_"))
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                got = spark.sql(
-                    f"SELECT coalesce(sum(n), 0) AS c FROM {name}"
-                ).collect()[0]["c"]
-                if got >= N_ROWS:
-                    break
-                time.sleep(0.05)
-        finally:
-            query.stop()
-            query.awaitTermination(30)
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name).orderBy("bucket")
+    return _drain_bucket_agg(spark, "mrs_range_stream", "mrs_pystream_sink")
 
 
 ORACLE["source_python_stream"] = ORACLE["source_python_datasource"]

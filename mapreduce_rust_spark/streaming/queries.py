@@ -25,8 +25,6 @@ high-cardinality, even spread across executors.
 from __future__ import annotations
 
 import os
-
-from mapreduce_rust_spark.session import scratch_dir
 from itertools import count
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,6 +32,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
 from mapreduce_rust_spark.functions.text import tokenize_whitespace
+from mapreduce_rust_spark.session import scoped_confs, scratch_dir, state_partitions
 
 ORACLE: dict[str, str] = {}
 
@@ -64,55 +63,54 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def run_available_now(
-    sdf: DataFrame, output_mode: str, partitions: int | None = None
+    sdf: DataFrame, output_mode: str, cap: int = 16, final_on_arrival: bool = False
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion over the currently
     available input and return the memory sink as a batch frame.
 
-    Streaming state stores take their partition count from
-    ``spark.sql.shuffle.partitions`` at first checkpoint and get NO
-    AQE coalescing — in a bare session (the driver's) the 200-default
-    means 200 state dirs per stateful operator per micro-batch, a
-    ~4× slowdown at test scale. Pin it to the session's core count
-    for the duration of the run, then restore (each run here starts a
-    fresh checkpoint, so the scoped change is safe; production
-    streams size this deliberately and never pass through here)."""
+    State stores take their partition count from
+    ``spark.sql.shuffle.partitions`` at first checkpoint and get no
+    AQE coalescing (a bare session's 200 means 200 state dirs per
+    stateful operator per micro-batch). The run uses
+    ``state_partitions(spark, cap)``: the session's cores, at most
+    ``cap``, so a replay never commits more state partitions than it
+    has cores. ``final_on_arrival`` declares that the query emits
+    every output row in the batch that reads its input; the run then
+    skips the trailing no-data micro-batch, which would only evict
+    state. Both confs are scoped to the run, which starts a fresh
+    checkpoint; production streams size their partitions before the
+    first checkpoint and never pass through here."""
+    # Cap: the cost of a bounded local replay is the state-store
+    # commit (a delta file per store per partition per micro-batch);
+    # a stream-stream join measured 9.6 s at 32 partitions vs 3.3 s at
+    # 8. Partitions beyond the core count add commits and no
+    # parallelism; below it, compute-heavy streams lose parallelism
+    # (the hopping-window agg: 3.9 s at 8 vs 1.4 s at 16 in one
+    # session), so the default cap is 16 and only the joins (4 stores
+    # per partition) pass 8.
+    # No-data batch: after the last data batch Spark runs one more to
+    # advance the watermark. It emits rows only for operators gated on
+    # the watermark (outer-join null rows, append-mode windows); for
+    # an inner interval join or a dedup whose delay outlasts the data
+    # it only evicts state, at the price of one more commit of every
+    # state store.
     name = f"mrs_stream_{next(_run_ids)}"
     spark = sdf.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # State-store COMMIT overhead (delta file per store per partition
-    # per micro-batch) dominates a bounded local replay: a stream-
-    # stream join carries 4 stores/partition, and measured wall-clock
-    # at 32 vs 8 partitions was 9.6 s vs 3.3 s for the same job. But
-    # compute-heavy streams lose parallelism under a tight cap — the
-    # hopping-window agg measured 3.9 s at 8 vs 1.4 s at 16 in one
-    # session, while the state-heavy slugs were within noise of 8 —
-    # so 16 is the local-replay compromise. A production stream sizes
-    # this to its executor count BEFORE first checkpoint (it is
-    # frozen thereafter) where per-partition commit cost amortizes
-    # over real per-batch volume.
-    # callers with unusually state-store-heavy plans (the stream-
-    # stream join: 4 stores/partition) pass an explicit lower cap
-    target = str(
-        partitions
-        if partitions is not None
-        else min(spark.sparkContext.defaultParallelism, 16)
-    )
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
+    confs: dict[str, str | int] = {
+        "spark.sql.shuffle.partitions": state_partitions(spark, cap)
+    }
+    if final_on_arrival:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with scoped_confs(spark, confs):
+        (
             sdf.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .option("checkpointLocation", scratch_dir(prefix="mrs_ckpt_"))
             .start()
+            .awaitTermination()
         )
-        query.awaitTermination()
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     return spark.table(name)
 
 
@@ -200,7 +198,10 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return run_available_now(deduped, "append").orderBy("user_id", "event_type")
+    # a key's first row emits in the batch that reads it; with nothing
+    # expiring, the no-data batch would write no row: final on arrival
+    out = run_available_now(deduped, "append", final_on_arrival=True)
+    return out.orderBy("user_id", "event_type")
 
 
 ORACLE["streaming_dedup_watermarked"] = """
@@ -425,11 +426,12 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour"
         ),
     )
-    # 8 partitions: this plan commits 4 state stores per partition per
-    # micro-batch; measured 3.3 s at 8 vs 9.6 s at 32 (r03), and the
-    # 16-partition session default still pays ~2× the 8-partition
-    # commit fan-out for the same bounded replay
-    out = run_available_now(joined, "append", partitions=8)
+    # at most 8 partitions (never more than cores): this plan commits 4
+    # state stores per partition per micro-batch; measured 3.3 s at 8
+    # vs 9.6 s at 32 (r03). An inner join emits each pair in the batch
+    # that reads both rows, so the watermark-advancing no-data batch
+    # would only evict state: final on arrival
+    out = run_available_now(joined, "append", cap=8, final_on_arrival=True)
     return out.groupBy(F.col("c_user").alias("user_id")).agg(
         F.count(F.lit(1)).alias("n_attributed"),
         fround(F.sum("p_value")).alias("attributed_value"),
@@ -488,7 +490,8 @@ def streaming_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    out = run_available_now(joined, "append", partitions=8)
+    # keeps the no-data batch: the null-padded rows emit only there
+    out = run_available_now(joined, "append", cap=8)
     from mapreduce_rust_spark.sources.tables import load_table
 
     bound = load_table(spark, sf_dir, "events").agg(
@@ -587,27 +590,18 @@ def streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — state corruption, lost micro-batches, or misrouted keys
     would all surface here. Reading state scales with state size (one
     row per key per shard), never with the replayed stream."""
-    from mapreduce_rust_spark.session import scratch_dir
-
     ev = read_stream_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
     ckpt = scratch_dir(prefix="mrs_state_inspect_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": state_partitions(spark)}):
+        (
             agg.writeStream.format("noop")
             .outputMode("complete")
             .trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
             .start()
+            .awaitTermination()
         )
-        query.awaitTermination()
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -634,14 +628,12 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     final table is value-checkable: hash-equality against the batch
     argmax proves no batch was dropped, duplicated, or misordered
     through the sink protocol."""
-    import os
-    import time
-
     from pyspark.sql import Window
 
     from mapreduce_rust_spark.sources.pysource import (
         N_ROWS,
         _register_stream_source,
+        drain,
     )
 
     _register_stream_source(spark)
@@ -669,29 +661,14 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         if top is not None:
             holder["max_id"] = max(int(holder["max_id"]), int(top))
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": state_partitions(spark)}):
         query = (
             sdf.writeStream.foreachBatch(upsert)
             .trigger(processingTime="0 seconds")
             .option("checkpointLocation", scratch_dir(prefix="mrs_fbu_ckpt_"))
             .start()
         )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if int(holder["max_id"]) == N_ROWS - 1:
-                    break
-                time.sleep(0.05)
-        finally:
-            query.stop()
-            query.awaitTermination(30)
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        drain(query, lambda: int(holder["max_id"]) == N_ROWS - 1)
     return (
         spark.read.parquet(holder["path"])
         .select(

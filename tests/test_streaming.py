@@ -3,6 +3,9 @@ availableNow triggers (deterministic, no timing sleeps)."""
 
 from __future__ import annotations
 
+import os
+import time
+
 import pytest
 
 
@@ -161,6 +164,109 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     )
     want = {r["u"]: r["n"] for r in batch.collect()}
     assert {k: v[0] for k, v in got.items()} == want
+
+
+@pytest.fixture
+def stream_progress(spark):
+    """Progress events of the streams a test runs: ``take()`` returns
+    those posted since the last call (after the listener bus drains)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    seen = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            seen.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def take():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        out = list(seen)
+        seen.clear()
+        return out
+
+    listener = Listener()
+    spark.streams.addListener(listener)
+    take()
+    yield take
+    spark.streams.removeListener(listener)
+
+
+@pytest.mark.parametrize("slug", ["streaming_stream_join", "streaming_events_hourly"])
+def test_replay_state_partitions_never_exceed_cores(spark, sf_dir, stream_progress, slug):
+    """A bounded replay commits at most one state partition per core:
+    an explicit cap (the joins' 8) lowers the count, never raises it."""
+    from mapreduce_rust_spark.streaming import queries
+
+    getattr(queries, slug)(spark, sf_dir)
+    ops = [op for p in stream_progress() for op in p.stateOperators]
+    assert ops
+    assert max(op.numShufflePartitions for op in ops) <= spark.sparkContext.defaultParallelism
+
+
+@pytest.mark.parametrize("slug", ["streaming_stream_join", "streaming_dedup_watermarked"])
+def test_final_on_arrival_skips_only_the_eviction_batch(
+    spark, sf_dir, stream_progress, monkeypatch, slug
+):
+    """Queries whose output is final on arrival run one micro-batch,
+    and their rows equal a run that keeps the trailing no-data batch."""
+    from mapreduce_rust_spark.streaming import queries
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    got = sorted(getattr(queries, slug)(spark, sf).collect())
+    assert [p.batchId for p in stream_progress()] == [0]
+
+    orig = queries.run_available_now
+    monkeypatch.setattr(
+        queries,
+        "run_available_now",
+        lambda sdf, mode, **kw: orig(sdf, mode, **{**kw, "final_on_arrival": False}),
+    )
+    want = sorted(getattr(queries, slug)(spark, sf).collect())
+    assert sorted(p.batchId for p in stream_progress()) == [0, 1]
+    assert got == want and got
+
+
+def test_drain_fails_loudly(spark, monkeypatch, tmp_path):
+    """A drain that misses its row target raises once the deadline
+    passes, and a stream that dies raises at once with its error
+    chained — neither returns a partial sink."""
+    from mapreduce_rust_spark.sources import pysource
+
+    pysource._register_partitioned_stream_source(spark)
+
+    def start(writer, ckpt):
+        return (
+            writer.trigger(processingTime="0 seconds")
+            .option("checkpointLocation", str(tmp_path / ckpt))
+            .start()
+        )
+
+    monkeypatch.setattr(pysource, "DRAIN_TIMEOUT_S", 1.0)
+    sdf = spark.readStream.format("mrs_range_pstream").load()
+    q = start(sdf.writeStream.format("memory").queryName("drain_unreachable"), "a")
+    with pytest.raises(TimeoutError) as err:
+        pysource.drain(q, lambda: spark.table("drain_unreachable").count() > pysource.N_ROWS)
+    assert err.value.__cause__ is None and not q.isActive
+
+    def fail(batch_df, batch_id):
+        raise ValueError("sink rejected the batch")
+
+    monkeypatch.setattr(pysource, "DRAIN_TIMEOUT_S", 120.0)
+    t0 = time.monotonic()
+    q = start(sdf.writeStream.foreachBatch(fail), "b")
+    with pytest.raises(TimeoutError) as err:
+        pysource.drain(q, lambda: False)
+    assert time.monotonic() - t0 < 60 and not q.isActive
+    assert "sink rejected the batch" in str(err.value.__cause__)
 
 
 def test_python_stream_source_matches_batch_source(spark):
